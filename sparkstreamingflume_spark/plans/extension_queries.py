@@ -21,6 +21,8 @@ Scale design notes (each query's docstring has specifics):
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -5542,9 +5544,17 @@ _ORACLE_MAT_CTES = (
 
 
 def _materialize_ctes(sql: str, names: tuple[str, ...] = _ORACLE_MAT_CTES) -> str:
-    """Add DuckDB ``AS MATERIALIZED`` to the named CTE definitions."""
+    """Add DuckDB ``AS MATERIALIZED`` to the named CTE definitions.
+
+    A definition is the name right after ``WITH`` or a comma, so a CTE
+    whose name merely ends in a hinted one (``base`` vs ``e``) is left
+    alone."""
     for n in names:
-        sql = sql.replace(f"{n} AS (", f"{n} AS MATERIALIZED (")
+        sql = re.sub(
+            rf"((?:\bWITH|,)\s*){re.escape(n)} AS \(",
+            rf"\g<1>{n} AS MATERIALIZED (",
+            sql,
+        )
     return sql
 
 

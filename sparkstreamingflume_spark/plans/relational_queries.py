@@ -378,8 +378,10 @@ def q_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Sessionization (batch): 30-min-gap session boundaries via lag + "
     "running sum, rolled up per session. The per-user window shuffle is "
     "the only exchange; at scale it partitions on user_id (hashed, "
-    "AQE-skew-splittable). Streaming twin: streaming/stateful.py "
-    "(applyInPandasWithState with idle-gap timeouts).",
+    "AQE-skew-splittable). A new session starts when the gap is > 30 "
+    "min. The streaming sessionizer is sessions.session_windows "
+    "(streaming/sessions.py), which follows q_session_window's >= "
+    "boundary, so this form has no bit-exact streaming twin.",
     tags=("relational", "window", "session"),
     bench=True,
 )
@@ -431,17 +433,18 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
            count(*) AS n_events
     FROM sess GROUP BY user_id, session_no
     """,
-    doc="Sessionization via Spark's NATIVE session_window aggregate — the "
-    "third sessionizer next to the lag+cumsum batch form (q_sessionize) "
-    "and the applyInPandasWithState streaming form (streaming/stateful.py"
-    "). One combinable shuffle on user_id, merge-on-overlap semantics: a "
+    doc="Sessionization via Spark's NATIVE session_window aggregate, next "
+    "to the lag+cumsum batch form (q_sessionize). One combinable "
+    "shuffle on user_id, merge-on-overlap semantics: a "
     "new session starts when the gap is >= 30 min (the window END is "
     "last-event + gap, so an event landing exactly at the end does NOT "
     "merge — note the >= vs the > in q_sessionize's boundary rule; the "
     "oracle spells the island form with >= for exactly this reason). "
-    "The same expression runs under readStream + watermark for "
-    "streaming session aggregation with state eviction — pinned "
-    "stream≡batch by tests/test_windowed.py. Extra: how-variant of "
+    "The same expression runs under readStream + watermark as "
+    "sessions.session_windows (streaming/sessions.py), the streaming "
+    "sessionizer with state eviction — pinned stream≡batch by "
+    "tests/test_stream_sessions.py and tests/test_windowed.py. Extra: "
+    "how-variant of "
     "q_sessionize.",
     tags=("relational", "window", "session"),
     extra=True,

@@ -31,6 +31,34 @@ def test_all_oracles_parse_in_duckdb():
         con.execute("EXPLAIN " + sql)
 
 
+def test_materialize_ctes_anchors_to_cte_boundaries():
+    """Only a CTE definition (after WITH or a comma) named exactly like a
+    hinted CTE gets ``AS MATERIALIZED``: ``base`` ends in the hinted
+    ``e`` and stays plain. The three hinted oracles keep their exact
+    text (sha256 pins of the SQL they rendered before the match was
+    anchored)."""
+    import hashlib
+
+    from sparkstreamingflume_spark.plans import REGISTRY
+    from sparkstreamingflume_spark.plans.extension_queries import (
+        _materialize_ctes,
+    )
+
+    sql = "WITH base AS (SELECT 1 AS x),\n    e AS (SELECT x FROM base) SELECT x FROM e"
+    assert _materialize_ctes(sql) == (
+        "WITH base AS (SELECT 1 AS x),\n"
+        "    e AS MATERIALIZED (SELECT x FROM base) SELECT x FROM e"
+    )
+    pins = {
+        "q_label_propagation": "c624a300e8d467af771d2ec96ed6db9c2d59e979de1a1f88c4ed69ebd5ac7487",
+        "q_label_propagation_deep": "56ce0bfae02de8b1d72d65eaddd380cecb2e9ca8c7da960554dc59704cd6f937",
+        "q_diversity_select": "31492fc2a08be12990a58b4198b4de24311bcfbdde50b8b66bb045daa552a4e9",
+    }
+    for name, digest in pins.items():
+        sha = hashlib.sha256(REGISTRY[name].oracle.encode()).hexdigest()
+        assert sha == digest, name
+
+
 def test_entry_flagship(spark):
     import __spark_entry__ as E
 

@@ -1,7 +1,7 @@
-"""Zero-Python foreachBatch funnel twin (streaming/funnels.py) vs the
-batch q_funnel definition — stream≡batch on the full fixture under
-batching, replay, and compaction; single-completion semantics; and
-agreement with the applyInPandasWithState twin.
+"""Streaming funnel twin (streaming/funnels.py) vs the batch q_funnel
+definition — stage gating and single-completion semantics (replay
+included), stream≡batch on the full fixture under batching, replay and
+compaction, and the live-stream wiring of ``attach_funnels``.
 """
 
 from __future__ import annotations
@@ -10,11 +10,13 @@ from pyspark.sql import functions as F
 
 from sparkstreamingflume_spark.plans import REGISTRY
 from sparkstreamingflume_spark.streaming.funnels import (
+    attach_funnels,
     compact_index,
     funnel_update_batch,
     read_completions,
     read_funnels,
 )
+from tests.conftest import events_file_stream
 
 import pytest
 
@@ -61,32 +63,54 @@ def _batch(spark):
 
 def test_cross_batch_fold_and_single_completion(spark, tmp_path):
     """A funnel advancing one stage per batch completes exactly once;
-    post-completion events are no-ops; NULL-ts rows drop."""
+    post-completion events (in the completing batch or later) and a
+    replay of the completing batch are no-ops; NULL-ts rows drop. Stage
+    gating: a click before the view is not stage 2, a purchase before
+    the click stalls the funnel at stage 2, and a user with no view
+    gets no row."""
     ix = tmp_path / "ix"
     funnel_update_batch(
         _frame(
             spark,
             [
+                (1, "2024-01-01 09:00:00", 6, "click"),  # before s1
                 (1, "2024-01-01 10:00:00", 1, "view"),
                 (1, None, 2, "purchase"),  # dropped: NULL ts
+                (2, "2024-01-01 10:00:00", 7, "view"),
+                (2, "2024-01-01 10:10:00", 8, "purchase"),  # before s2
+                (2, "2024-01-01 10:20:00", 9, "click"),
+                (3, "2024-01-01 10:00:00", 10, "purchase"),  # never enters
             ],
         ),
         0,
         str(ix),
     )
     assert _funnels(spark, ix)[1][3] == 1
+    f2 = _funnels(spark, ix)[2]
+    assert f2[3] == 2 and f2[2] is None
+    assert 3 not in _funnels(spark, ix)
     funnel_update_batch(
         _frame(spark, [(1, "2024-01-02 10:00:00", 3, "click")]), 1, str(ix)
     )
     assert _funnels(spark, ix)[1][3] == 2
-    funnel_update_batch(
-        _frame(spark, [(1, "2024-01-03 10:00:00", 4, "purchase")]),
-        2,
-        str(ix),
+    completing = _frame(
+        spark,
+        [
+            (1, "2024-01-03 10:00:00", 4, "purchase"),
+            (1, "2024-01-03 11:00:00", 11, "purchase"),
+        ],
     )
+    funnel_update_batch(completing, 2, str(ix))
     f = _funnels(spark, ix)[1]
     assert f[3] == 3 and f[4] == f[2] - f[0]
+    assert f[2] == 1_704_276_000_000_000  # the first purchase wins
     assert read_completions(spark, str(ix)).count() == 1
+    # replaying the completing batch re-emits only a bit-identical row
+    funnel_update_batch(completing, 2, str(ix))
+    assert read_completions(spark, str(ix)).count() == 1
+    raw = spark.read.parquet(str(ix / "completions"))
+    assert raw.distinct().count() == 1
+    assert _funnels(spark, ix)[1] == f
     # a second purchase is a no-op (completion emitted once)
     funnel_update_batch(
         _frame(spark, [(1, "2024-01-04 10:00:00", 5, "purchase")]),
@@ -128,80 +152,23 @@ def test_stream_matches_batch_with_replay_and_compaction(spark, tmp_path):
     }
 
 
-def test_python_twin_agreement_on_completions(spark, tmp_path):
-    """The zero-Python twin's completions equal the
-    applyInPandasWithState twin's closed rows on the same feed."""
-    import json
-
-    from sparkstreamingflume_spark.streaming.stateful import (
-        funnel_progress,
-    )
-
-    ev = (
-        spark.read.parquet(f"{SF}/events.parquet")
-        .select("user_id", "ts", "event_id", "event_type")
-        .orderBy(F.col("ts").isNull(), "ts", "event_id")
-        .collect()
-    )
-    rows = [
-        (
-            r.user_id,
-            None if r.ts is None else r.ts.isoformat(sep=" "),
-            r.event_id,
-            r.event_type,
-        )
-        for r in ev
-    ]
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    half = (len(rows) + 1) // 2
-    for i in range(2):
-        (landing / f"p{i}.json").write_text(
-            "\n".join(
-                json.dumps(
-                    {
-                        "user_id": u,
-                        "ts": ts,
-                        "event_id": eid,
-                        "event_type": ty,
-                    }
-                )
-                for u, ts, eid, ty in rows[i * half : (i + 1) * half]
-            )
-            + "\n"
-        )
-    stream = (
-        spark.readStream.schema(STR_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(str(landing))
-        .withColumn("ts", F.to_timestamp("ts"))
-    )
-    from sparkstreamingflume_spark.streaming.funnels import attach_funnels
-
+def test_attach_stream_matches_batch(spark, tmp_path):
+    """``attach_funnels`` on a live file stream (the in-order fixture
+    over two micro-batches) reproduces q_funnel and its completions."""
     ix = tmp_path / "ix"
     q = (
-        attach_funnels(stream, str(ix), str(tmp_path / "ckpt_fb"))
+        attach_funnels(
+            events_file_stream(spark, tmp_path, SF),
+            str(ix),
+            str(tmp_path / "ckpt"),
+        )
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination(120)
-    out = funnel_progress(stream, id_col="event_id")
-    q2 = (
-        out.writeStream.format("memory")
-        .queryName("t_fn_py_vs_fb")
-        .option("checkpointLocation", str(tmp_path / "ckpt_py"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination(120)
-    py = {
-        r.user_id: (r.s1_us, r.s2_us, r.s3_us, r.convert_us)
-        for r in spark.sql(
-            "SELECT * FROM t_fn_py_vs_fb WHERE closed"
-        ).collect()
-    }
-    fb = {
-        r.user_id: (r.s1_us, r.s2_us, r.s3_us, r.convert_us)
-        for r in read_completions(spark, str(ix)).collect()
-    }
-    assert fb == py
+    want = _batch(spark)
+    assert _funnels(spark, ix) == want
+    # one raw completion row per converted user across both batches
+    raw = spark.read.parquet(str(ix / "completions")).collect()
+    assert len(raw) == len({r.user_id for r in raw})
+    assert {r.user_id for r in raw} == {u for u, f in want.items() if f[3] == 3}

@@ -1,7 +1,8 @@
-"""Zero-Python foreachBatch SCD2 twin (streaming/regimes.py) vs the
-batch q_scd2_history definition — stream≡batch on the full fixture
-under batching, replay, and compaction, plus planted micro-pins for
-the merge / close / NULL-regime stitch cases.
+"""Streaming SCD2 twin (streaming/regimes.py) vs the batch
+q_scd2_history definition — stream≡batch on the full fixture under
+batching, replay, and compaction, planted micro-pins for the close /
+merge / NULL-regime cases within and across batches, and the
+live-stream wiring of ``attach_regimes``.
 """
 
 from __future__ import annotations
@@ -10,10 +11,12 @@ from pyspark.sql import functions as F
 
 from sparkstreamingflume_spark.plans import REGISTRY
 from sparkstreamingflume_spark.streaming.regimes import (
+    attach_regimes,
     compact_index,
     read_history,
     regime_update_batch,
 )
+from tests.conftest import events_file_stream
 
 import pytest
 
@@ -49,7 +52,9 @@ def test_merge_close_and_null_regimes(spark, tmp_path):
     open NULL regime (numbered 0 — the batch leading-NULL rule).
     Batch 1 MERGES user 1's regime (same type: counts add, start
     keeps) and CLOSES user 2's NULL regime (new type) with
-    valid_to = the new regime's start."""
+    valid_to = the new regime's start. Within batch 0, user 3's type
+    changes close regimes in sequence and consecutive NULLs after a
+    typed regime extend one NULL regime."""
     ix = tmp_path / "ix"
     regime_update_batch(
         _frame(
@@ -59,6 +64,11 @@ def test_merge_close_and_null_regimes(spark, tmp_path):
                 (1, "2024-01-01 10:05:00", 2, "view"),
                 (2, "2024-01-01 09:00:00", 3, None),
                 (2, None, 4, "view"),  # NULL-ts dropped
+                (3, "2024-01-01 10:00:00", 11, "view"),
+                (3, "2024-01-01 10:05:00", 12, "view"),
+                (3, "2024-01-01 10:10:00", 13, "click"),  # closes view
+                (3, "2024-01-01 10:15:00", 14, None),  # closes click
+                (3, "2024-01-01 10:20:00", 15, None),  # extends NULL
             ],
         ),
         0,
@@ -67,6 +77,12 @@ def test_merge_close_and_null_regimes(spark, tmp_path):
     h = _hist(spark, ix)
     assert h[(1, 1)][0] == "view" and h[(1, 1)][1] == 2
     assert h[(2, 0)][0] is None and h[(2, 0)][3] is None  # open NULL regime
+    u3 = [h[(3, n)] for n in (1, 2, 3)]
+    assert [(t, n) for t, n, _, _ in u3] == [("view", 2), ("click", 1), (None, 2)]
+    # interval close: valid_to == the successor's valid_from
+    assert u3[0][3] == u3[1][2] and u3[1][3] == u3[2][2]
+    assert u3[2][3] is None
+    assert sorted(n for u, n in h if u == 3) == [1, 2, 3]
     regime_update_batch(
         _frame(
             spark,
@@ -133,79 +149,18 @@ def test_stream_matches_batch_with_replay_and_compaction(spark, tmp_path):
     assert _hist(spark, ix) == _batch_hist(spark)
 
 
-def test_python_twin_agreement_on_closed_regimes(spark, tmp_path):
-    """The zero-Python twin's closed regimes agree with the
-    applyInPandasWithState twin's on the same two-batch feed (one
-    semantics, two execution strategies). The Python twin emits only
-    CLOSED regimes (emit_open=False default), so compare that set."""
-    import json
-
-    from sparkstreamingflume_spark.streaming.stateful import regime_history
-
-    ev = (
-        spark.read.parquet(f"{SF}/events.parquet")
-        .select("user_id", "ts", "event_id", "event_type")
-        .orderBy(F.col("ts").isNull(), "ts", "event_id")
-        .collect()
-    )
-    rows = [
-        (
-            r.user_id,
-            None if r.ts is None else r.ts.isoformat(sep=" "),
-            r.event_id,
-            r.event_type,
-        )
-        for r in ev
-    ]
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    half = (len(rows) + 1) // 2
-    for i in range(2):
-        (landing / f"p{i}.json").write_text(
-            "\n".join(
-                json.dumps(
-                    {
-                        "user_id": u,
-                        "ts": ts,
-                        "event_id": eid,
-                        "event_type": ty,
-                    }
-                )
-                for u, ts, eid, ty in rows[i * half : (i + 1) * half]
-            )
-            + "\n"
-        )
-    stream = (
-        spark.readStream.schema(STR_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(str(landing))
-        .withColumn("ts", F.to_timestamp("ts"))
-    )
-    from sparkstreamingflume_spark.streaming.regimes import attach_regimes
-
+def test_attach_stream_matches_batch(spark, tmp_path):
+    """``attach_regimes`` on a live file stream (the in-order fixture
+    over two micro-batches) reproduces q_scd2_history."""
     ix = tmp_path / "ix"
     q = (
-        attach_regimes(stream, str(ix), str(tmp_path / "ckpt_fb"))
+        attach_regimes(
+            events_file_stream(spark, tmp_path, SF),
+            str(ix),
+            str(tmp_path / "ckpt"),
+        )
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination(120)
-    out = regime_history(stream, id_col="event_id")
-    q2 = (
-        out.writeStream.format("memory")
-        .queryName("t_rg_py_vs_fb")
-        .option("checkpointLocation", str(tmp_path / "ckpt_py"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination(120)
-    py_closed = {
-        (r.user_id, r.regime_no): (r.event_type, r.n_events, r.valid_from_us, r.valid_to_us)
-        for r in spark.sql(
-            "SELECT * FROM t_rg_py_vs_fb WHERE closed"
-        ).collect()
-    }
-    fb_closed = {
-        k: v for k, v in _hist(spark, ix).items() if v[3] is not None
-    }
-    assert fb_closed == py_closed
+    assert _hist(spark, ix) == _batch_hist(spark)

@@ -1,7 +1,7 @@
-"""Zero-Python foreachBatch retention twin (streaming/retentions.py)
-vs the batch q_retention definition — exact under ANY arrival order
-(the Python twin's headline property, preserved natively): shuffled
-feeds, cohort-shift retractions, replay, compaction.
+"""Streaming retention twin (streaming/retentions.py) vs the batch
+q_retention definition — exact under ANY arrival order: once-per-day
+emission, cohort-shift retractions, shuffled feeds, replay,
+compaction.
 """
 
 from __future__ import annotations
@@ -51,7 +51,8 @@ def _batch(spark):
 def test_cohort_shift_retracts_and_reemits(spark, tmp_path):
     """A late earlier-day event moves the user's cohort: every prior
     row retracts (-1 at old coords) and re-emits at the new cohort, so
-    the summed triangle is as if the events had arrived in order."""
+    the summed triangle is as if the events had arrived in order. A
+    second event on an active day in the same batch emits nothing."""
     ix = tmp_path / "ix"
     # day ids: 2024-01-10 = 19732, 2024-01-12 = 19734, 2024-01-05 = 19727
     retention_update_batch(
@@ -59,6 +60,7 @@ def test_cohort_shift_retracts_and_reemits(spark, tmp_path):
             spark,
             [
                 (1, "2024-01-10 08:00:00", 1, "view"),
+                (1, "2024-01-10 18:00:00", 6, "click"),  # same day
                 (1, "2024-01-12 09:00:00", 2, "view"),
                 (1, None, 3, "view"),  # NULL ts dropped
             ],
@@ -69,6 +71,9 @@ def test_cohort_shift_retracts_and_reemits(spark, tmp_path):
     t = _triangle(spark, ix)
     d10 = 19732
     assert t == {(d10, 0): 1, (d10, 2): 1}
+    # one +1 per active day, nothing for the repeat
+    deltas = spark.read.parquet(str(ix / "delta")).collect()
+    assert sorted(r.delta for r in deltas) == [1, 1]
     # the late earlier event shifts the cohort to 2024-01-05
     retention_update_batch(
         _frame(spark, [(1, "2024-01-05 10:00:00", 4, "view")]), 1, str(ix)
@@ -78,6 +83,12 @@ def test_cohort_shift_retracts_and_reemits(spark, tmp_path):
         (d05, 0): 1,
         (d05, 5): 1,
         (d05, 7): 1,
+    }
+    # the shift really retracted: -1 rows at the old cohort
+    retracted = spark.read.parquet(str(ix / "delta")).filter("delta = -1")
+    assert {(r.cohort_day, r.offset_days) for r in retracted.collect()} == {
+        (d10, 0),
+        (d10, 2),
     }
     # revisiting an already-seen day is a no-op
     retention_update_batch(

@@ -1,20 +1,21 @@
-"""Zero-Python foreachBatch transition twin (streaming/transitions.py)
-vs the batch q_event_transitions definition — the same pins as the
-applyInPandasWithState twin (tests/test_stream_transitions.py), plus
-the replay and compaction contracts the parquet-index form adds.
+"""Streaming transition twin (streaming/transitions.py) vs the batch
+q_event_transitions definition: first-event and NULL pins, the
+cross-batch boundary, replay and compaction, and the live-stream
+wiring of ``attach_transitions``.
 """
 
 from __future__ import annotations
 
-import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from sparkstreamingflume_spark.plans import REGISTRY
 from sparkstreamingflume_spark.streaming.transitions import (
+    attach_transitions,
     compact_index,
     read_matrix,
     transition_update_batch,
 )
+from tests.conftest import events_file_stream
 
 SCHEMA = (
     "user_id long, ts timestamp, event_id long, event_type string"
@@ -146,77 +147,52 @@ def test_stream_matches_batch_with_compaction_and_replay(spark, tmp_path):
     assert _matrix(spark, ix) == batch
 
 
-def test_python_twin_agrees(spark, tmp_path):
-    """The zero-Python twin and the applyInPandasWithState twin fold
-    the same in-order feed to the same matrix (one semantics, two
-    execution strategies)."""
-    import json
-
-    from sparkstreamingflume_spark.streaming.stateful import (
-        transition_counts,
-    )
-
-    ev = pq.read_table(f"{SF}/events.parquet")
-    rows = [
-        (
-            r["user_id"],
-            None if r["ts"] is None else r["ts"].isoformat(sep=" "),
-            r["event_id"],
-            r["event_type"],
-        )
-        for r in ev.to_pylist()
-    ]
-    rows.sort(key=lambda r: (r[1] is None, r[1] or "", r[2]))
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    half = (len(rows) + 1) // 2
-    for i in range(2):
-        (landing / f"p{i}.json").write_text(
-            "\n".join(
-                json.dumps(
-                    {
-                        "user_id": u,
-                        "ts": ts,
-                        "event_id": eid,
-                        "event_type": ty,
-                    }
-                )
-                for u, ts, eid, ty in rows[i * half : (i + 1) * half]
-            )
-            + "\n"
-        )
-    stream = (
-        spark.readStream.schema(
-            "user_id LONG, ts STRING, event_id LONG, event_type STRING"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .json(str(landing))
-        .withColumn("ts", F.to_timestamp("ts"))
-    )
-    # zero-Python twin via its attach helper (exercises the streaming
-    # wiring, not just the callback)
-    from sparkstreamingflume_spark.streaming.transitions import (
-        attach_transitions,
-    )
-
+def test_state_bridges_batches(spark, tmp_path):
+    """The stored tail type pairs with the next batch's head, and the
+    within-batch pairs are pre-summed: one delta row per (user, pair,
+    batch)."""
     ix = tmp_path / "ix"
-    q = attach_transitions(
-        stream, str(ix), str(tmp_path / "ckpt_fb")
-    ).trigger(availableNow=True).start()
-    q.awaitTermination(120)
-    # Python twin (id_col now defaults to event_id — the ADVICE fix)
-    out = transition_counts(stream)
-    q2 = (
-        out.writeStream.format("memory")
-        .queryName("t_tr_py_vs_fb")
-        .option("checkpointLocation", str(tmp_path / "ckpt_py"))
+    transition_update_batch(
+        _frame(
+            spark,
+            [
+                (7, "2024-01-01 10:00:00", 1, "view"),
+                (7, "2024-01-01 10:05:00", 2, "view"),
+                (7, "2024-01-01 10:07:00", 3, "view"),
+            ],
+        ),
+        0,
+        str(ix),
+    )
+    transition_update_batch(
+        _frame(spark, [(7, "2024-01-01 10:10:00", 4, "purchase")]),
+        1,
+        str(ix),
+    )
+    assert _matrix(spark, ix) == {
+        ("view", "view"): 2,
+        ("view", "purchase"): 1,
+    }
+    assert spark.read.parquet(str(ix / "delta")).count() == 2
+
+
+def test_attach_stream_matches_batch(spark, tmp_path):
+    """``attach_transitions`` on a live file stream (the in-order
+    fixture over two micro-batches) folds to q_event_transitions'
+    matrix."""
+    ix = tmp_path / "ix"
+    q = (
+        attach_transitions(
+            events_file_stream(spark, tmp_path, SF),
+            str(ix),
+            str(tmp_path / "ckpt"),
+        )
         .trigger(availableNow=True)
         .start()
     )
-    q2.awaitTermination(120)
-    py = {}
-    for r in spark.sql("SELECT * FROM t_tr_py_vs_fb").collect():
-        k = (r.type_from, r.type_to)
-        py[k] = py.get(k, 0) + r.delta
-    py = {k: v for k, v in py.items() if v != 0}
-    assert _matrix(spark, ix) == py
+    q.awaitTermination(120)
+    batch = {
+        (r.type_from, r.type_to): r.n_transitions
+        for r in REGISTRY["q_event_transitions"].build(spark, SF).collect()
+    }
+    assert _matrix(spark, ix) == batch
