@@ -11,8 +11,11 @@ as a column only helps if the optimizer keeps the staging projection
 intact.
 
 ``stage_columns`` pins the staging projection by adding one
-non-deterministic column (``monotonically_increasing_id``): both rules
-refuse to cross a non-deterministic projection. The subtlety: a barrier
+non-deterministic column (``spark_partition_id``): both rules refuse to
+cross a non-deterministic projection. ``spark_partition_id`` rather than
+``monotonically_increasing_id``, because streaming DataFrames reject the
+latter and the one-pass CDR router (streaming/pipeline.py) stages its
+split the same way on micro-batches. The subtlety: a barrier
 column nothing reads is REMOVED by ``ColumnPruning`` before either rule
 runs, making the projection deterministic again — so the downstream
 filter must reference it. ``anchor(pred)`` conjoins the always-true
@@ -54,7 +57,7 @@ def stage_columns(df: DataFrame, keep: list[str], **staged: F.Column) -> DataFra
     return df.select(
         *keep,
         *[expr.alias(name) for name, expr in staged.items()],
-        F.monotonically_increasing_id().alias(BARRIER_COL),
+        F.spark_partition_id().alias(BARRIER_COL),
     )
 
 

@@ -5006,16 +5006,25 @@ def _srp_signatures(reps: DataFrame, bands: int, bits: int = 0) -> DataFrame:
     # min(size(emb), _SRP_MAXDIM)).
     signs = _srp_signs(bands * KNN_LSH_BITS_MAX)
 
-    def srp_sig_batch(emb, nbits):
+    def srp_sig_batch(emb, nbits, has_null):
         import numpy as np
         import pandas as pd
 
         smat = np.asarray(signs, dtype=np.float64)
         out: list[list[int] | None] = []
-        for e, nb in zip(emb, nbits):
+        for e, nb, hn in zip(emb, nbits, has_null):
             if e is None or nb is None:
                 out.append(None)
                 continue
+            # Arrow hands a NULL element over as NaN, which takes the
+            # NaN sign branch; the SQL fold propagates NULL instead.
+            # Callers filter such vectors out (_emb_valid), so one here
+            # is a broken input contract, not data to hash.
+            if hn:
+                raise ValueError(
+                    "srp signature input has a NULL element inside a "
+                    "non-null embedding; filter with _emb_valid first"
+                )
             nb = int(nb)
             a = np.asarray(e, dtype=np.float64)[:_SRP_MAXDIM]
             p = smat[: bands * nb, : a.shape[0]] * a
@@ -5043,9 +5052,13 @@ def _srp_signatures(reps: DataFrame, bands: int, bits: int = 0) -> DataFrame:
         reps.crossJoin(F.broadcast(bf))
         .select(
             "vec_id",
-            F.posexplode(srp_sigs(F.col("emb"), F.col("nbits_"))).alias(
-                "band", "band_sig"
-            ),
+            F.posexplode(
+                srp_sigs(
+                    F.col("emb"),
+                    F.col("nbits_"),
+                    F.size(F.array_compact("emb")) < F.size("emb"),
+                )
+            ).alias("band", "band_sig"),
         )
     )
     sw = Window.partitionBy("band", "band_sig")

@@ -10,8 +10,15 @@ Everything is a pure ``DataFrame -> DataFrame`` function of built-in
 expressions, so the SAME code path serves batch frames and streaming
 micro-batches — batch≡stream equivalence is a unit test, not a hope.
 At scale: routing is a single derived column (one scan, no 11 filters),
-masking is per-row expression work (codegen), enrichment is a broadcast
-hash join — no shuffle anywhere in the per-record path.
+enrichment is a broadcast hash join — no shuffle anywhere in the
+per-record path. In the one-pass router (``routed_pipeline`` and
+``routed_pipeline_dual``) the split, the mask and the key extraction are
+expressions that whole-stage codegen compiles: the mask is a constant
+splice of the split array (functions/lines.py), not an indexed
+``transform`` lambda, which runs interpreted per array element.
+``process_type`` and ``routed_pipeline_unioned`` keep the lambda form on
+purpose: they are the independent reference the router is tested
+against.
 """
 
 from __future__ import annotations
@@ -20,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sparkstreamingflume_spark.functions import lines as L
+from sparkstreamingflume_spark.functions.barrier import anchor, stage_columns
 from sparkstreamingflume_spark.schemas import ARCHIVE_PREFIXES, RECORD_TYPES, RecordType
 
 
@@ -129,21 +137,39 @@ def process_type(
     )
 
 
-def _routed_masked(df: DataFrame) -> tuple[DataFrame, str, F.Column, F.Column]:
+def _check_router_types(types: list[tuple[str, RecordType]]) -> None:
+    """Preconditions of the one-pass router over ``types``: one separator
+    for all of them (the line is split once, before the type is known),
+    and lac/ci/start-time positions that are inside the type's width and
+    not masked (they are read from the unmasked array)."""
+    seps = {rt.sep for _, rt in types}
+    if len(seps) != 1:
+        raise ValueError(f"one-pass router needs one separator for all types, got {sorted(seps)}")
+    for p, rt in types:
+        for name in ("lac_idx", "ci_idx", "start_time_idx"):
+            i = getattr(rt, name)
+            if not 0 <= i < rt.n_fields:
+                raise ValueError(f"type {p}: {name}={i} is outside its {rt.n_fields} fields")
+            if i in rt.phone_idx:
+                raise ValueError(f"type {p}: {name}={i} is a masked phone field")
+
+
+def _routed_masked(df: DataFrame) -> DataFrame:
     """Shared pre-join stage of the one-pass router: route → conform →
     mask → derive lookup_key, all as a single projection over literal
-    map columns (rec_type → n_fields / phone-index set / lac / ci).
-    Returns (frame with _arr + lookup_key, sep, start_time col, tag col).
+    map columns (rec_type → n_fields / lac / ci / start / tag).
+
+    Returns one row per conformed input line with (value, start_time,
+    tag, lookup_key): ``value`` is the masked, re-joined line, built
+    before any fan-out so the masking runs once per input line. The mask
+    is a CASE over the distinct phone-index sets, each branch a
+    codegen'd splice (functions/lines.py); lookup_key and start_time
+    read the unmasked array, which :func:`_check_router_types` makes
+    equivalent.
     """
     types = sorted(RECORD_TYPES.items())
+    _check_router_types(types)
     m_nf = F.create_map(*[x for p, rt in types for x in (F.lit(p), F.lit(rt.n_fields))])
-    m_mask = F.create_map(
-        *[
-            x
-            for p, rt in types
-            for x in (F.lit(p), F.array(*[F.lit(i) for i in rt.phone_idx]))
-        ]
-    )
     m_lac = F.create_map(*[x for p, rt in types for x in (F.lit(p), F.lit(rt.lac_idx))])
     m_ci = F.create_map(*[x for p, rt in types for x in (F.lit(p), F.lit(rt.ci_idx))])
     m_st = F.create_map(
@@ -151,29 +177,33 @@ def _routed_masked(df: DataFrame) -> tuple[DataFrame, str, F.Column, F.Column]:
     )
     m_tag = F.create_map(*[x for p, rt in types for x in (F.lit(p), F.lit(rt.tag))])
 
-    sep = types[0][1].sep  # all six socket types are comma-delimited
+    sep = types[0][1].sep
     routed = route(df).filter(F.col("rec_type").isin(*[p for p, _ in types]))
     rt_col = F.col("rec_type")
-    arr = F.split(F.regexp_replace(F.col("value"), f"{sep}+\\z", ""), sep)
-    with_arr = routed.withColumn("_arr", arr).filter(
-        F.size("_arr") == F.element_at(m_nf, rt_col)
-    )
-    mask_set = F.element_at(m_mask, rt_col)
-    masked = with_arr.withColumn(
-        "_arr",
-        F.transform(
-            "_arr",
-            lambda x, i: F.when(F.array_contains(mask_set, i), F.md5(x)).otherwise(x),
-        ),
-    )
+    # The split is staged behind the optimizer barrier so the width
+    # filter and the projection below read one array: pushed through a
+    # plain projection, the filter re-evaluated the split (0.93-1.02 ->
+    # 0.76-0.81 s on 102k lines, 4 cores; functions/barrier.py).
+    staged = stage_columns(routed, ["rec_type"], _arr=L.line_fields(F.col("value"), sep))
+    with_arr = staged.filter(anchor(F.size("_arr") == F.element_at(m_nf, rt_col)))
+    arr = F.col("_arr")
+    by_mask: dict[tuple[int, ...], list[str]] = {}
+    for p, rt in types:
+        by_mask.setdefault(tuple(sorted(set(rt.phone_idx))), []).append(p)
+    value = None
+    for idx, prefixes in by_mask.items():
+        cond, masked = rt_col.isin(*prefixes), L.mask_fields_arr(arr, idx, sep)
+        value = F.when(cond, masked) if value is None else value.when(cond, masked)
     key = F.concat_ws(
         ",",
-        F.element_at(F.col("_arr"), F.element_at(m_lac, rt_col) + 1),
-        F.element_at(F.col("_arr"), F.element_at(m_ci, rt_col) + 1),
+        F.element_at(arr, F.element_at(m_lac, rt_col) + 1),
+        F.element_at(arr, F.element_at(m_ci, rt_col) + 1),
     )
-    start_time = F.element_at(F.col("_arr"), F.element_at(m_st, rt_col) + 1)
-    return masked.withColumn("lookup_key", key), sep, start_time, F.element_at(
-        m_tag, rt_col
+    return with_arr.select(
+        value.alias("value"),
+        F.element_at(arr, F.element_at(m_st, rt_col) + 1).alias("start_time"),
+        F.element_at(m_tag, rt_col).alias("tag"),
+        key.alias("lookup_key"),
     )
 
 
@@ -181,27 +211,21 @@ def routed_pipeline(df: DataFrame, lookup: DataFrame, how: str = "inner") -> Dat
     """The whole 6-type graph in ONE pass over the stream.
 
     The schema registry becomes literal map columns (rec_type →
-    n_fields / phone-index set / lac / ci / start / tag), so routing,
-    conforming, masking, and key extraction are a single projection —
-    one scan, one broadcast join, no per-type branch-and-union (the
-    reference re-filtered its cached stream once per type,
-    src/StreamingSocketProcess.scala:138-159; a naive port unions 6
-    filtered branches = 6 passes per micro-batch).
+    n_fields / lac / ci / start / tag) and one CASE over the phone-index
+    sets, so routing, conforming, masking, and key extraction are a
+    single projection — one scan, one broadcast join, no per-type
+    branch-and-union (the reference re-filtered its cached stream once
+    per type, src/StreamingSocketProcess.scala:138-159; a naive port
+    unions 6 filtered branches = 6 passes per micro-batch).
     ``routed_pipeline_unioned`` keeps the branch-per-type shape as the
     equivalence reference; ``routed_pipeline_dual`` is the two-partner
     form the reference actually deploys.
     """
-    pre, sep, start_time, tag = _routed_masked(df)
-    joined = pre.join(
+    joined = _routed_masked(df).join(
         F.broadcast(lookup), F.col("lookup_key") == F.col("map_key"), how
     )
     flag = F.col("map_value") if how == "inner" else F.coalesce("map_value", F.lit(""))
-    return joined.select(
-        F.array_join("_arr", sep).alias("value"),
-        start_time.alias("start_time"),
-        flag.alias("flag"),
-        tag.alias("tag"),
-    )
+    return joined.select("value", "start_time", flag.alias("flag"), "tag")
 
 
 def routed_pipeline_dual(
@@ -214,16 +238,17 @@ def routed_pipeline_dual(
     ``processTable(record, mapN)`` calls are at :371-372), each partner's
     enrichment feeding its own sink tree (/yaxin vs /yiyang).
 
-    Here: one pre-join pass (route → conform → mask → key), then each
-    record fans out to every partner (J3) and is enriched against THAT
-    partner's map in a single broadcast join on (partner, lookup_key) —
-    the per-partner maps union into one partner-tagged broadcast, so N
-    partners still cost one scan + one join. Output adds a ``partner``
-    column for partner-routed sinks (K9). Row-equivalence with running
+    Here: one pre-join pass (route → conform → mask → key) that builds
+    the output line once per input line, then each record fans out to
+    every partner (J3) and is enriched against THAT partner's map in a
+    single broadcast join on (partner, lookup_key) — the per-partner
+    maps union into one partner-tagged broadcast, so N partners still
+    cost one scan + one join. Output adds a ``partner`` column for
+    partner-routed sinks (K9). Row-equivalence with running
     ``routed_pipeline`` once per partner is pinned by
     tests/test_streaming.py (batch and streamed).
     """
-    pre, sep, start_time, tag = _routed_masked(df)
+    pre = _routed_masked(df)
     partners = sorted(lookups)
     fan = pre.withColumn(
         "partner", F.explode(F.array(*[F.lit(p) for p in partners]))
@@ -241,13 +266,7 @@ def routed_pipeline_dual(
         how,
     )
     flag = F.col("map_value") if how == "inner" else F.coalesce("map_value", F.lit(""))
-    return joined.select(
-        F.array_join("_arr", sep).alias("value"),
-        start_time.alias("start_time"),
-        flag.alias("flag"),
-        tag.alias("tag"),
-        "partner",
-    )
+    return joined.select("value", "start_time", flag.alias("flag"), "tag", "partner")
 
 
 def routed_pipeline_unioned(

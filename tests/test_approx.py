@@ -616,3 +616,23 @@ def test_srp_arm_liveness_parametrized_over_n(spark):
     # the adaptive width really is > 8 bits (some signature uses bit 9)
     assert 256 <= max_sig < 512, max_sig
     assert mass_adaptive > 3 * mass_static, (mass_adaptive, mass_static)
+
+
+def test_srp_signatures_reject_null_element(spark):
+    """A NULL element inside a non-null embedding reaches the numpy
+    sign batch as NaN, which the SQL fold would not produce; the batch
+    raises instead of hashing it (callers filter with _emb_valid)."""
+    import pytest
+
+    from sparkstreamingflume_spark.plans.extension_queries import (
+        KNN_LSH_BANDS,
+        _srp_signatures,
+    )
+
+    reps = spark.createDataFrame(
+        [(1, [1.0, -2.0, 3.0]), (2, [1.0, None, 3.0])], "vec_id long, emb array<double>"
+    )
+    with pytest.raises(Exception, match="NULL element"):
+        _srp_signatures(reps, KNN_LSH_BANDS, 8).collect()
+    ok = _srp_signatures(reps.filter("vec_id = 1"), KNN_LSH_BANDS, 8).count()
+    assert ok == KNN_LSH_BANDS

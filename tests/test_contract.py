@@ -244,6 +244,8 @@ def test_line_family_splits_once_and_filter_stays_staged(spark):
             ._jdf.queryExecution().executedPlan().toString()
         )
         assert plan.count("split(") == 1, f"{name}: split re-expanded:\n{plan}"
+        # the mask/drop kernels are codegen'd splices, not lambdas
+        assert "lambdafunction" not in plan, f"{name}: interpreted lambda:\n{plan}"
         if name == "q_dirty_filter":
             # ADVICE r13 #2: reuse the loop's plan (not a second build)
             # and anchor on the FilterExec operator line ("Filter (" /
@@ -258,6 +260,37 @@ def test_line_family_splits_once_and_filter_stays_staged(spark):
                 "q_dirty_filter's width filter was pushed below the "
                 "widen exchange:\n" + plan
             )
+
+
+def test_cdr_mask_kernel_stays_codegen(spark):
+    """The mask and drop kernels are constant splices of the split array,
+    not indexed transform/filter lambdas, which run interpreted once per
+    array element (functions/lines.py). routed_pipeline_dual's executed
+    plan has no lambda and no trailing-separator regex, splits each line
+    once, and has exactly 5 md5 calls: one CASE branch per distinct
+    phone-index set ({11}, {12,15}, {13,16}), built before the partner
+    fan-out. A return to the interpreted form fails here (the registry's
+    mask/drop queries are pinned in
+    test_line_family_splits_once_and_filter_stays_staged)."""
+    from pyspark.sql import functions as F
+
+    from sparkstreamingflume_spark.streaming import pipeline
+
+    # a non-literal line, so no optimizer rule folds the kernel away
+    lines = spark.range(1).select(
+        F.concat(F.lit("61r"), F.col("id").cast("string")).alias("value")
+    )
+    lookup = spark.createDataFrame([("L0,C0", "v")], "map_key string, map_value string")
+    plan = (
+        pipeline.routed_pipeline_dual(lines, {"a": lookup, "b": lookup})
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    assert "lambdafunction" not in plan, plan
+    assert "regexp_replace" not in plan, plan
+    assert plan.count("md5(") == 5, plan
+    assert plan.count("split(") == 1, plan
+    # the masked line is computed below the fan-out, not once per partner
+    assert plan.index("md5(") > plan.index("Generate"), plan
 
 
 def test_no_python_row_path_or_cartesian_anywhere(spark):
